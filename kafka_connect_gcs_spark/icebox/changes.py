@@ -36,6 +36,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from kafka_connect_gcs_spark.icebox.table import IceboxTable, Snapshot
+from kafka_connect_gcs_spark.operators.util import local_frame
 
 
 def _live(col):
@@ -96,7 +97,7 @@ def table_changes(
         cand_parts.append(spark.read.parquet(*dv_paths).select(key_col))
     if not cand_parts:
         schema = table.read(to_version).schema
-        empty = spark.createDataFrame([], schema)
+        empty = local_frame(spark, [], schema)
         return _classify(empty, empty, key_col, order_col, deleted_col)
 
     cand = cand_parts[0]

@@ -40,6 +40,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from kafka_connect_gcs_spark.operators.text import BPE_PIECE_RE
+from kafka_connect_gcs_spark.operators.util import local_frame
 
 
 def _pieces(text_col: str):
@@ -295,7 +296,8 @@ def bpe_vocab(df: DataFrame, merges: "list[dict]", text_col: str = "text") -> Da
     )
     n_chars = char_ids.agg(F.count(F.lit(1)).alias("_n"))
     if merges:
-        m = spark.createDataFrame(
+        m = local_frame(
+            spark,
             [(d["rank"], d["left"] + d["right"]) for d in merges],
             "rank int, token string",
         )

@@ -285,11 +285,14 @@ def unigram_logprob(
     ``ln(c/tot)`` sums to the same total as ``k·ln(c/tot)`` over distinct
     pairs (the 6-dp round absorbs ulp-level summation-order differences,
     which a double sum over a shuffle already has). The vocabulary agg is
-    map-side combined so its exchange carries ≈|vocab per partition|; the
-    per-doc sum is the only data-sized exchange. The corpus total is a
-    1-row broadcast, not a driver constant baked into the plan; the
-    vocabulary join stays shuffled by contract (vocab grows with the
-    corpus — AQE broadcasts it at runtime when it is actually small).
+    map-side combined so its exchange carries ≈|vocab per partition|. The
+    vocabulary join is the data-sized exchange: it shuffles every word
+    OCCURRENCE by word, and stays shuffled by contract (vocab grows with
+    the corpus — AQE broadcasts it at runtime when it is actually small,
+    and then the occurrences do not move). The per-doc sum is map-side
+    combined, so its exchange carries ≈ one partial row per doc per
+    partition. The corpus total is a 1-row broadcast, not a driver
+    constant baked into the plan.
     """
     exploded = df.select(
         F.col(id_col), F.explode(words(F.col(text_col))).alias("word")
@@ -336,10 +339,14 @@ def bigram_logprob(
     a double sum over a shuffle already has). The bigram-count agg is
     map-side combined (exchange carries ≈|distinct bigrams per
     partition|); prefix counts ``c(w ·)`` reduce the bigram table again
-    by first word; the per-doc sum is the only data-sized exchange. No
-    broadcast of the LM: bigram vocabulary grows with the corpus, so the
-    join is a plain shuffled join on the bigram key (AQE converts it to
-    a broadcast at runtime when the fitted LM is actually small).
+    by first word. No broadcast of the LM: bigram vocabulary grows with
+    the corpus, so the joins are plain shuffled joins, and they are the
+    data-sized exchanges — every bigram OCCURRENCE is shuffled by bigram
+    key for the count join and again by first word for the prefix join
+    (AQE converts either join to a broadcast at runtime when its side of
+    the fitted LM is actually small). The per-doc sum is map-side
+    combined, so its exchange carries ≈ one partial row per doc per
+    partition.
     """
     ws = df.select(F.col(id_col), words(F.col(text_col)).alias("_ws"))
     bigrams = ws.select(

@@ -42,6 +42,7 @@ from kafka_connect_gcs_spark.operators.dedup_text import (
     _minhash_of_shingles,
     staged_shingles,
 )
+from kafka_connect_gcs_spark.operators.util import local_frame
 
 
 def _band_bucket(sig_col, bidx: int, rows_per_band: int, portable: bool):
@@ -347,8 +348,10 @@ def signature_agreement(a, b, num_hashes: int):
 
 def _empty_dedup_result(new_docs: DataFrame, id_col: str) -> DataFrame:
     id_type = new_docs.schema[id_col].dataType.simpleString()
-    return new_docs.sparkSession.createDataFrame(
-        [], f"doc_id {id_type}, dup_of {id_type}, est_jaccard double"
+    return local_frame(
+        new_docs.sparkSession,
+        [],
+        f"doc_id {id_type}, dup_of {id_type}, est_jaccard double",
     )
 
 
@@ -449,7 +452,8 @@ def dedup_against_index(
                 # legacy marker from the id-list protocol (pre-stamp
                 # index layout): fall back to the anti-join it encoded
                 excl = F.broadcast(
-                    spark.createDataFrame(
+                    local_frame(
+                        spark,
                         [(i,) for i in marker["doc_ids"]],
                         f"doc_id {new_docs.schema[id_col].dataType.simpleString()}",
                     )

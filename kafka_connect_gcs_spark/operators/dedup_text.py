@@ -24,6 +24,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from kafka_connect_gcs_spark.operators.text import words
+from kafka_connect_gcs_spark.operators.util import local_frame
 
 
 # ---------------------------------------------------------------------------
@@ -300,8 +301,8 @@ def connected_components(
                 comp_min[r] = nd
         out_rows = [(nd, comp_min[find(nd)]) for nd in parent]
         node_type = edges.schema["src"].dataType.simpleString()
-        result = pairs.sparkSession.createDataFrame(
-            out_rows, f"node {node_type}, component {node_type}"
+        result = local_frame(
+            pairs.sparkSession, out_rows, f"node {node_type}, component {node_type}"
         )
         edges.unpersist()
         return result

@@ -37,6 +37,7 @@ from pyspark.sql import types as T
 from kafka_connect_gcs_spark.config import EngineConfig
 from kafka_connect_gcs_spark.icebox.table import Field, IceboxTable, ManifestEntry
 from kafka_connect_gcs_spark.operators.dedup import lww_dedup
+from kafka_connect_gcs_spark.operators.util import local_frame
 
 #: canonical CDC target-table schema (input_hint payload + LWW bookkeeping).
 #: ``deleted`` rows are TOMBSTONES: a delete must keep its (doc_id,
@@ -173,7 +174,8 @@ def prune_affected_files(
     ranged = [m for m in manifests if m.min_doc_id is not None]
     if not ranged:
         return no_stats
-    ranges = spark.createDataFrame(
+    ranges = local_frame(
+        spark,
         [(m.path, m.min_doc_id, m.max_doc_id) for m in ranged],
         T.StructType(
             [
@@ -394,7 +396,8 @@ def merge_into(
                 .select(*out_cols)
             )
         if need_prune and ranged_manifests:
-            ranges_df = spark.createDataFrame(
+            ranges_df = local_frame(
+                spark,
                 [(m.path, m.min_doc_id, m.max_doc_id) for m in ranged_manifests],
                 "path string, lo string, hi string",
             )
@@ -411,8 +414,11 @@ def merge_into(
                 .select(*out_cols)
             )
         if need_sample:
+            # distinct keys, as in the pipeline's metadata job: a hot key
+            # must not fill the sample
             branches.append(
                 skinny.select("doc_id")
+                .distinct()
                 .orderBy(F.xxhash64(F.col("doc_id")))
                 .limit(cfg.shuffle_partitions * 64)
                 .select(

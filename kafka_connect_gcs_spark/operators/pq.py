@@ -32,6 +32,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from .similarity import _train_centroids_numpy, topk_per_query
+from .util import local_frame
 
 
 def l2_normalize(df: DataFrame, vec_col: str = "embedding") -> DataFrame:
@@ -283,8 +284,8 @@ def pq_adc_topk(
     qrows = l2_normalize(
         queries.select(query_id_col, vec_col), vec_col
     ).collect()
-    luts = spark.createDataFrame(
-        _query_luts(codebooks, qrows), _lut_schema(queries, query_id_col)
+    luts = local_frame(
+        spark, _query_luts(codebooks, qrows), _lut_schema(queries, query_id_col)
     )
     scored = codes.crossJoin(F.broadcast(luts)).select(
         query_id_col, id_col, _adc_score(codebooks).alias("sim")
@@ -380,7 +381,8 @@ def ivfpq_topk_prepartitioned(
     ]
     probed = sorted({c for _, c in probe_pairs})
     pruned = store.where(F.col("centroid").isin(probed))
-    pdf = spark.createDataFrame(
+    pdf = local_frame(
+        spark,
         probe_pairs,
         StructType(
             [
@@ -389,8 +391,8 @@ def ivfpq_topk_prepartitioned(
             ]
         ),
     )
-    luts = spark.createDataFrame(
-        _query_luts(codebooks, qrows), _lut_schema(queries, query_id_col)
+    luts = local_frame(
+        spark, _query_luts(codebooks, qrows), _lut_schema(queries, query_id_col)
     )
     scored = (
         pruned.join(F.broadcast(pdf), "centroid")

@@ -21,6 +21,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+from .util import local_frame
+
 
 def topk_per_query(
     scored: DataFrame,
@@ -696,11 +698,12 @@ def ivf_topk_prepartitioned(
     pruned = store.where(F.col("centroid").isin(probed))
     # per-query probe membership re-checked on the (broadcast) join so each
     # query only scores ITS buckets, not the union of all queries' buckets
-    qdf = spark.createDataFrame(
+    qdf = local_frame(
+        spark,
         [(int(r[0]), [float(x) for x in r[1]]) for r in qrows],
         f"{query_id_col} long, _qvec array<float>",
     )
-    pdf = spark.createDataFrame(probe_pairs, f"{query_id_col} long, centroid int")
+    pdf = local_frame(spark, probe_pairs, f"{query_id_col} long, centroid int")
     scored = (
         pruned.join(F.broadcast(pdf), "centroid")
         .join(F.broadcast(qdf), query_id_col)

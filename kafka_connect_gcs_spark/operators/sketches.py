@@ -32,6 +32,8 @@ import math
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from kafka_connect_gcs_spark.operators.util import local_frame
+
 #: cap on the leading-zero rank: contributions below 2^-R are dropped so
 #: the indicator sum stays an exact 64-bit integer (m * 2^R ≤ 2^48 at
 #: m=256). P(rho > 40) = 2^-40 per key — the estimator is unaffected.
@@ -274,7 +276,7 @@ def bloom_pack(spark, bits: DataFrame, num_bits: int) -> DataFrame:
     if bad:
         raise ValueError(f"bit_idx out of range [0, {num_bits}): {bad[:3]}")
     bitmap = [i in idx for i in range(num_bits)]
-    return spark.createDataFrame([(bitmap,)], "bloom array<boolean>")
+    return local_frame(spark, [(bitmap,)], "bloom array<boolean>")
 
 
 def bloom_maybe_contains(

@@ -2,7 +2,36 @@
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame
+from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql.types import StructType
+
+
+def local_frame(
+    spark: SparkSession, rows: "list[tuple]", schema: "StructType | str"
+) -> DataFrame:
+    """A driver-built relation (``rows`` are tuples in ``schema`` order;
+    ``schema`` is a ``StructType`` or a DDL string), shipped to the JVM as
+    Arrow record batches.
+
+    ``spark.createDataFrame`` decodes a ``pyarrow.Table`` inside the JVM
+    whatever ``spark.sql.execution.arrow.pyspark.enabled`` says, so the
+    relation never starts a Python worker. A Python list would instead be
+    pickled into a Python RDD, and every job that scans it — each CDC
+    micro-batch's manifest ranges, an empty table read — would pay a
+    Python-worker stage for a few rows.
+    """
+    import pyarrow as pa
+    from pyspark.sql.pandas.types import to_arrow_schema
+
+    if isinstance(schema, str):
+        schema = StructType.fromDDL(schema)
+    arrow_schema = to_arrow_schema(schema)
+    columns = list(zip(*rows)) if rows else [()] * len(arrow_schema)
+    table = pa.Table.from_arrays(
+        [pa.array(c, type=f.type) for c, f in zip(columns, arrow_schema)],
+        schema=arrow_schema,
+    )
+    return spark.createDataFrame(table, schema)
 
 
 def spread_small_input(

@@ -54,6 +54,7 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from kafka_connect_gcs_spark.sources.formats import ByteLengthFormat, CorruptRecord
+from kafka_connect_gcs_spark.operators.util import local_frame
 from kafka_connect_gcs_spark.sources.store import as_store
 
 #: {topic}-{ppppp}-{oooooooooooo}.gz — GCSFilesReader.java:58-63
@@ -722,13 +723,14 @@ def _decode_plan(
     store = as_store(root)
     io_filter = io_filter or GzipFilter()
     if not plan:
-        return spark.createDataFrame([], RECORDS_SCHEMA)
+        return local_frame(spark, [], RECORDS_SCHEMA)
     plan_schema = (
         "data_key string, topic string, partition int, byte_offset long, "
         "byte_length long, first_record_offset long, resume_after long, "
         "last_offset long"
     )
-    plan_df = spark.createDataFrame(
+    plan_df = local_frame(
+        spark,
         [
             (
                 p["data_key"], p["topic"], p["partition"], p["byte_offset"],

@@ -38,6 +38,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from kafka_connect_gcs_spark.operators.ivm import apply_batch, merge_rollup
+from kafka_connect_gcs_spark.operators.util import local_frame
 from kafka_connect_gcs_spark.streaming.pipeline import Checkpoint, _list_segments
 
 #: manifest retains this many applied batch_ids — replay can only ever be
@@ -94,14 +95,14 @@ class RollupPipeline:
     def read_state(self) -> DataFrame:
         v = self._manifest()["version"]
         if v == 0:
-            return self.spark.createDataFrame([], _STATE_SCHEMA)
+            return local_frame(self.spark, [], _STATE_SCHEMA)
         return self.spark.read.parquet(self._vdir(v, "state"))
 
     def read_rollup(self) -> DataFrame:
         """The maintained view at the current committed version."""
         v = self._manifest()["version"]
         if v == 0:
-            return self.spark.createDataFrame([], _ROLLUP_SCHEMA)
+            return local_frame(self.spark, [], _ROLLUP_SCHEMA)
         return self.spark.read.parquet(self._vdir(v, "rollup"))
 
     # -- one micro-batch ---------------------------------------------------

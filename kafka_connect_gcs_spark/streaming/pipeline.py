@@ -37,6 +37,7 @@ from kafka_connect_gcs_spark.config import EngineConfig
 from kafka_connect_gcs_spark.icebox.table import IceboxTable
 from kafka_connect_gcs_spark.metrics import Metrics, create_metrics
 from kafka_connect_gcs_spark.operators.merge import CDC_TABLE_FIELDS, merge_into
+from kafka_connect_gcs_spark.operators.util import local_frame
 from kafka_connect_gcs_spark.operators.validate import valid_expr
 
 
@@ -250,13 +251,16 @@ class CdcPipeline:
             narrow_cols.append("delivery_seq")
         narrow = flagged.select(*narrow_cols).persist(StorageLevel.MEMORY_AND_DISK)
 
-        # --- ONE metadata job per batch: a tagged union of every small
+        # --- ONE metadata collect per batch: a tagged union of every small
         # metadata query the batch needs — per-partition lineage stats,
         # affected-file pruning, the range-bound key sample, and the
         # changed-key count for merge-mode choice. Driver job dispatch is
-        # the serial fixed cost in micro-batch mode (~3-4 jobs/batch in
-        # round 1); this folds them into a single collect over the cached
-        # narrow projection.
+        # the serial fixed cost in micro-batch mode; this folds them into a
+        # single collect over the cached narrow projection. A copy-on-write
+        # batch still launches 7 jobs in all (measured): the feed schema
+        # read, the broadcast of the manifest ranges below (an Arrow-decoded
+        # local relation, so no Python worker), this collect, and 4 in the
+        # heavy pass's write.
         okn = narrow.where(F.col("_ok"))
         out_cols = ["tag", "s", "n1", "n2", "n3", "n4"]
 
@@ -287,8 +291,8 @@ class CdcPipeline:
         ]
         no_stats_paths = [m.path for m in snap.manifests if m.min_doc_id is None]
         if ranged:
-            ranges_df = self.spark.createDataFrame(
-                ranged, "path string, lo string, hi string"
+            ranges_df = local_frame(
+                self.spark, ranged, "path string, lo string, hi string"
             )
             # no doc_id-level distinct before the range join: the join is a
             # broadcast nested-loop against a handful of file ranges, so
@@ -313,10 +317,13 @@ class CdcPipeline:
         if self._bounds is not None and self._bounds_age < self.BOUNDS_REFRESH_EVERY:
             hint = self._bounds
         if hint is None:
+            # sample DISTINCT keys: over raw rows one hot key whose hash
+            # ranks low would fill every slot and collapse the bounds
             n_sample = self.cfg.shuffle_partitions * 64
             branches.append(
                 shaped(
                     okn.select("doc_id")
+                    .distinct()
                     .orderBy(F.xxhash64(F.col("doc_id")))
                     .limit(n_sample)
                     .select(

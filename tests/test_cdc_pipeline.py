@@ -208,3 +208,56 @@ def test_quarantine_rejects_corrupt_rows(spark, feed):
     valid, bad = split_valid(corrupted)
     assert valid.where(F.col("op") != "D").count() == 0
     assert bad.count() == raw.where(F.col("op") != "D").count()
+
+
+def test_range_bounds_survive_a_low_hash_hot_key(spark, tmp_path):
+    """The range-bound sample is drawn from DISTINCT doc_ids. A hot key
+    whose xxhash64 ranks below every other key, delivered more often than
+    the sample has slots, must not fill the sample and collapse the write
+    bounds to one key — in the pipeline's metadata job and in merge_into's
+    own fused metadata job."""
+    from pyspark.sql import functions as F
+
+    from kafka_connect_gcs_spark.icebox.table import IceboxTable
+    from kafka_connect_gcs_spark.operators.merge import CDC_TABLE_FIELDS, merge_into
+
+    spec = BinlogSpec(
+        num_events=1_200, num_docs=400, num_partitions=2, seed=5,
+        hot_fraction=0.5, hot_keys=1, duplicate_fraction=0.0,
+    )
+    ev = generate_changes(spark, spec)
+    cold_min = ev.where(F.col("doc_id") != "doc000000000").agg(
+        F.min(F.xxhash64("doc_id"))
+    ).first()[0]
+    hot = (
+        spark.range(4096)
+        .select(F.format_string("hot%05d", "id").alias("k"))
+        .select("k", F.xxhash64("k").alias("h"))
+        .orderBy("h")
+        .first()
+    )
+    assert hot.h < cold_min  # the hot key ranks first in the hash order
+    ev = ev.withColumn(
+        "doc_id",
+        F.when(F.col("doc_id") == "doc000000000", F.lit(hot.k)).otherwise(
+            F.col("doc_id")
+        ),
+    )
+    n_slots = 4 * 64  # shuffle_partitions × 64 sample slots
+    assert ev.where(F.col("doc_id") == hot.k).count() > n_slots
+    feed_dir = str(tmp_path / "feed")
+    ev.write.parquet(feed_dir + "/seg=00000000")
+    cfg = EngineConfig(
+        table_path=str(tmp_path / "table"),
+        feed_path=feed_dir,
+        checkpoint_path=str(tmp_path / "ckpt"),
+        shuffle_partitions=4,
+    )
+    pipe = CdcPipeline(spark, cfg)
+    pipe.run_available()
+    # four write buckets need three distinct upper bounds
+    assert len(pipe._bounds) == 3 and sorted(set(pipe._bounds)) == pipe._bounds
+
+    table = IceboxTable.create(spark, str(tmp_path / "table2"), CDC_TABLE_FIELDS)
+    bounds = merge_into(table, ev, "hot", cfg)["_bounds"]
+    assert len(bounds) == 3 and sorted(set(bounds)) == bounds

@@ -374,3 +374,82 @@ def test_tfidf_topk_shuffles_postings_not_text(spark, sf_dir):
 
     for m in re.finditer(r"Exchange [^\n]*", plan):
         assert "text#" not in m.group(0), m.group(0)
+
+
+def test_cdc_loop_builds_no_pickled_relation(spark, tmp_path, monkeypatch):
+    """Every relation the CDC loop builds on the driver (manifest ranges,
+    empty reads) is Arrow-decoded in the JVM. With the pickled-list path
+    of createDataFrame disabled, a COW batch, MoR batches with automatic
+    fold_deletes and compact, and table_changes all still run, and the
+    state equals the DuckDB last-writer-wins replay."""
+    import duckdb
+    from pyspark.sql import SparkSession
+
+    from kafka_connect_gcs_spark.config import EngineConfig
+    from kafka_connect_gcs_spark.icebox.changes import table_changes
+    from kafka_connect_gcs_spark.operators.merge import read_state
+    from kafka_connect_gcs_spark.sources.binlog import BinlogSpec, write_feed
+    from kafka_connect_gcs_spark.streaming.pipeline import CdcPipeline
+
+    feed = str(tmp_path / "feed")
+    spec = BinlogSpec(
+        num_events=6_000, num_docs=800, num_partitions=4, seed=11,
+        shuffle_window=200,
+    )
+    write_feed(spark, spec, feed, num_segments=6)
+
+    def pickled(*args, **kwargs):
+        raise AssertionError("driver-built relation pickled into a Python RDD")
+
+    monkeypatch.setattr(SparkSession, "_create_dataframe", pickled)
+
+    def cfg(mode, **kw):
+        return EngineConfig(
+            table_path=str(tmp_path / "table"),
+            feed_path=feed,
+            checkpoint_path=str(tmp_path / "ckpt"),
+            max_files_per_batch=2,
+            shuffle_partitions=8,
+            merge_mode=mode,
+            **kw,
+        )
+
+    first = CdcPipeline(spark, cfg("cow")).run_available(max_batches=1)
+    pipe = CdcPipeline(
+        spark,
+        cfg(
+            "mor",
+            auto_fold_dead_ratio=0.01,
+            auto_fold_min_dead=1,
+            auto_compact_min_small_files=0,
+        ),
+    )
+    rest = pipe.run_available()
+    assert [ln["mode"] for ln in first] == ["cow"]
+    assert rest and all(ln["mode"] == "mor" for ln in rest)
+    ops = {ln.get("op") for ln in pipe.ckpt.lineage()}
+    assert {"fold-deletes", "compact"} <= ops
+
+    want = sorted(
+        (r[0], tuple(r[1]), r[2], r[3], r[4])
+        for r in duckdb.sql(f"""
+            SELECT doc_id, tokens, n_tok, source, "offset" FROM (
+              SELECT *, row_number() OVER (PARTITION BY doc_id
+                ORDER BY "offset" DESC, delivery_seq DESC) AS rn
+              FROM read_parquet('{feed}/**/*.parquet'))
+            WHERE rn = 1 AND op <> 'D'
+        """).fetchall()
+    )
+    got = sorted(
+        (r.doc_id, tuple(r.tokens), r.n_tok, r.source, r.last_offset)
+        for r in read_state(pipe.table).collect()
+    )
+    assert got == want
+    v = pipe.table.current_version()
+    inserted = sorted(
+        (r.doc_id, r.new_offset)
+        for r in table_changes(pipe.table, 0, v).collect()
+        if r.change == "I"
+    )
+    assert inserted == [(w[0], w[4]) for w in want]
+    assert table_changes(pipe.table, v, v).count() == 0
